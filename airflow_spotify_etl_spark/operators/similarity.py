@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 __all__ = [
     "cosine_topk",
     "ivf_topk",
@@ -893,7 +895,8 @@ def search_ann_index(
     )
 
     qid_field = next(f for f in queries.schema.fields if f.name == query_id_col)
-    qcells = spark.createDataFrame(
+    qcells = local_frame(
+        spark,
         probe_pairs,
         StructType(
             [

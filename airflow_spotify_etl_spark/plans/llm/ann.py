@@ -7,6 +7,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ...session import local_frame
 from ...sources.files import load_table
 from .dedup import (
     _Q320_SQL,
@@ -1579,7 +1580,7 @@ def q318_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sweep = cell_top.crossJoin(
         F.broadcast(
-            spark.createDataFrame([(1,), (2,), (4,), (8,), (16,)], "nprobe int")
+            local_frame(spark, [(1,), (2,), (4,), (8,), (16,)], "nprobe int")
         )
     ).filter(F.col("cell_rank") <= F.col("nprobe"))
     wn = W.partitionBy("nprobe", "query_id").orderBy(
@@ -1945,7 +1946,7 @@ def q336_ann_cost_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     nprobes = F.broadcast(
-        spark.createDataFrame([(1,), (2,), (4,), (8,), (16,)], "nprobe int")
+        local_frame(spark, [(1,), (2,), (4,), (8,), (16,)], "nprobe int")
     )
     # exact work: candidates scored per (nprobe, query) = Σ probed cell sizes
     work = (

@@ -7,6 +7,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ...session import local_frame
 from ...sources.files import load_table
 from ._shared import (
     _build_concurrently,
@@ -2777,7 +2778,8 @@ def q367_capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
     pick = sm.select("source").distinct().orderBy("source").limit(2)
     two = [r.source for r in pick.collect()]
     if len(two) < 2:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "source_a string, source_b string, n1 long, n2 long,"
             " m_overlap long, n_hat_chapman long, n_union_observed long,"

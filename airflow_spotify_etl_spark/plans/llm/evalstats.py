@@ -7,6 +7,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ...session import local_frame
 from ...sources.files import load_table
 from .sampling import (
     _Q309_SQL,
@@ -816,7 +817,7 @@ def q263_pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("share_ppm", LongType()),
         ]
     )
-    return spark.createDataFrame(rows, schema).orderBy("rank")
+    return local_frame(spark, rows, schema).orderBy("rank")
 
 
 def _q263_sql() -> str:

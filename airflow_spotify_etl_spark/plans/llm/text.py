@@ -7,6 +7,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ...session import local_frame
 from ...sources.files import load_table
 from ._shared import (
     _STOPWORDS,
@@ -2513,9 +2514,7 @@ def q326_vocab_budget_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CAST(sum(CAST(c AS DECIMAL(38,0)) * nc) AS DECIMAL(38,0))")
         .alias("n_total"),
     )
-    ks = spark.createDataFrame(
-        [(10,), (100,), (1000,), (65536,)], "k int"
-    )
+    ks = local_frame(spark, [(10,), (100,), (1000,), (65536,)], "k int")
     # per K: the threshold row is the spectrum value whose cumulative
     # key count first reaches K (keys_above < K ≤ keys_above + nc)
     hit = (

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from ...operators.joins import asof_join
 from ...operators.quality import quality_report
+from ...session import local_frame
 from ...sources.files import load_table
 from ._shared import (
     _LOGRANK_CORE,
@@ -1918,7 +1919,7 @@ def q337_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.expr("CAST(cents AS DECIMAL(38,0)) * c")).alias("total"),
     )
     deciles = F.broadcast(
-        spark.createDataFrame([(d,) for d in range(1, 11)], "decile int")
+        local_frame(spark, [(d,) for d in range(1, 11)], "decile int")
     )
     cells = (
         cum.crossJoin(F.broadcast(tot))

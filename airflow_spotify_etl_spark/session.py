@@ -16,10 +16,12 @@ predicate pushdown / column pruning / join selection at any scale.
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
-__all__ = ["get_spark", "stop_spark"]
+__all__ = ["get_spark", "local_frame", "stop_spark"]
 
 
 def _default_parallelism() -> int:
@@ -76,6 +78,31 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence[Sequence], schema: StructType | str
+) -> DataFrame:
+    """Driver-local rows (tuples in ``schema`` field order) → DataFrame.
+
+    The rows go through a ``pyarrow.Table`` cast to the Spark schema, so
+    Spark plans them as a JVM ``LocalRelation`` (``LocalTableScan``).
+    ``createDataFrame`` on a Python list instead builds a ``LogicalRDD``
+    over a Python RDD, and every scan of it starts Python workers — for
+    a 50-row REST payload that worker start-up is most of the job. This
+    is the one way the engine turns driver-side rows into a DataFrame."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def stop_spark() -> None:

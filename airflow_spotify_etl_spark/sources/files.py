@@ -135,13 +135,15 @@ SCHEMAS: dict[str, T.StructType] = {
 }
 
 
-# parquet footer facts keyed on (path, mtime_ns, size): (row_groups, rows).
+# parquet footer facts per path: (mtime_ns, size, (row_groups, rows)).
 # load_table is called thousands of times per bench run; one driver-side
-# footer read per file VERSION amortizes to nothing, and keying on the
-# stat identity means a regenerated fixture (different row-group count)
-# or a transient read failure never serves stale fan-out decisions in a
-# long-lived session (ADVICE r11).
-_FOOTER_CACHE: dict[tuple[str, int, int], tuple[int, int]] = {}
+# footer read per file VERSION amortizes to nothing. The stat identity is
+# checked on every hit, so a regenerated fixture (different row-group
+# count) never serves stale fan-out decisions in a long-lived session, and
+# keying on the path alone keeps one entry per file: a new version
+# replaces the old one. A failed footer read is not cached — the next
+# call retries it (ADVICE r11, r12).
+_FOOTER_CACHE: dict[str, tuple[int, int, tuple[int, int]]] = {}
 
 
 def _footer_facts(path: str) -> tuple[int, int] | None:
@@ -152,17 +154,18 @@ def _footer_facts(path: str) -> tuple[int, int] | None:
         st = os.stat(path)
     except OSError:
         return None
-    key = (path, st.st_mtime_ns, st.st_size)
-    if key not in _FOOTER_CACHE:
-        try:
-            import pyarrow.parquet as pq
+    hit = _FOOTER_CACHE.get(path)
+    if hit is not None and hit[:2] == (st.st_mtime_ns, st.st_size):
+        return hit[2]
+    try:
+        import pyarrow.parquet as pq
 
-            meta = pq.ParquetFile(path).metadata
-            _FOOTER_CACHE[key] = (meta.num_row_groups, meta.num_rows)
-        except Exception:
-            _FOOTER_CACHE[key] = (-1, -1)
-    rg, rows = _FOOTER_CACHE[key]
-    return None if rg < 0 else (rg, rows)
+        meta = pq.ParquetFile(path).metadata
+    except Exception:
+        return None
+    facts = (meta.num_row_groups, meta.num_rows)
+    _FOOTER_CACHE[path] = (st.st_mtime_ns, st.st_size, facts)
+    return facts
 
 
 # High-cardinality key per table for the opt-in scan fan-out: hash

@@ -11,9 +11,12 @@ parameters ARE the pushed-down predicates:
 - ``limit``  → limit pushdown, clamped to the API cap of 50 (F6).
 - ``market`` → partition-pruning-like parameter (S4).
 
-Fetch happens driver-side (payloads are ≤50 docs by API contract — tiny),
-then becomes a distributed DataFrame with the explicit nested payload
-schema; flattening runs as Catalyst expressions. For a hypothetical
+Fetch happens driver-side (payloads are ≤50 docs by API contract — tiny)
+and the docs become a JVM ``LocalRelation`` through Arrow
+(``session.local_frame``), parsed with the explicit nested payload schema;
+flattening runs as Catalyst expressions. A ``LocalRelation`` is scanned
+inside the JVM: no Python worker starts per scan, and the ETL scans its
+payload several times (quality pass, append, summary). For a hypothetical
 many-partition REST source (thousands of artists), ``fetch_partitioned``
 shows the scale shape: keys distributed via ``mapInPandas`` so each executor
 fetches its own slice — the driver never becomes the bottleneck.
@@ -37,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.flatten import track_payload_schema
+from ..session import local_frame
 
 __all__ = [
     "SpotifyRestSource",
@@ -259,7 +263,8 @@ class SpotifyRestSource:
         (spotify_etl.py:95-130; URL-encoding parity with :108)."""
         payload = self._get("/search", q=name, type="artist", limit=1)
         items = payload.get("artists", {}).get("items", [])[:1]
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             [(a.get("id", ""), a.get("name", "Unknown")) for a in items],
             "artist_id string, artist_name string",
         )
@@ -301,10 +306,8 @@ class SpotifyRestSource:
         instead of failing the scan."""
         schema = track_payload_schema()
         if not rows:
-            return self.spark.createDataFrame([], schema)
-        raw = self.spark.createDataFrame(
-            [(json.dumps(r),) for r in rows], "raw string"
-        )
+            return local_frame(self.spark, [], schema)
+        raw = local_frame(self.spark, [(json.dumps(r),) for r in rows], "raw string")
         return raw.select(
             F.from_json("raw", schema, {"mode": "PERMISSIVE"}).alias("doc")
         ).select("doc.*")

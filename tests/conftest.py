@@ -181,9 +181,28 @@ _SLOW_TESTS = {
 
 
 def pytest_collection_modifyitems(config, items):
+    matched, files = set(), set()
     for item in items:
         base = item.nodeid.split("[", 1)[0]
         parts = base.split("::")
         key = parts[0].rpartition("/")[2] + "::" + parts[-1]
+        files.add(parts[0].rpartition("/")[2])
         if key in _SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+            matched.add(key)
+    # A renamed or removed test must not silently drop out of the slow
+    # tier. Only files collected whole are checked: a `file::test`
+    # argument or --lf collects part of a file.
+    if config.getoption("lf", False):
+        return
+    partial = {
+        a.split("::", 1)[0].rpartition("/")[2] for a in config.args if "::" in a
+    }
+    unmatched = sorted(
+        e for e in _SLOW_TESTS - matched
+        if e.split("::", 1)[0] in files - partial
+    )
+    if unmatched:
+        raise pytest.UsageError(
+            "_SLOW_TESTS entries match no collected test: " + ", ".join(unmatched)
+        )

@@ -134,6 +134,21 @@ def test_permissive_malformed_doc_becomes_defaults(spark, source):
     assert bad["popularity"] == 0 and bad["track_id"] == ""
 
 
+def test_rest_scans_are_local_relations(source):
+    """Every REST scan is a JVM LocalRelation, never a LogicalRDD over a
+    Python RDD: the ETL scans its payload several times, and each
+    LogicalRDD scan starts Python workers."""
+    scans = {
+        "search": source.search_artist("Artist 0"),
+        "top_tracks": source.top_tracks("art-0"),
+        "recently_played": source.recently_played(limit=5),
+        "empty": source._payload_df([]),
+    }
+    for name, df in scans.items():
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "LocalRelation" in plan and "LogicalRDD" not in plan, (name, plan)
+
+
 def test_oauth_user_auth_refreshes_and_caches(spark, transport, tmp_path):
     cache = tmp_path / "cache.json"
     cache.write_text(json.dumps({"refresh_token": "r-1"}))

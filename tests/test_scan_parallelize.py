@@ -15,6 +15,7 @@ from contextlib import redirect_stdout
 
 from pyspark.sql import functions as F
 
+from airflow_spotify_etl_spark.sources import files
 from airflow_spotify_etl_spark.sources.files import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -81,3 +82,25 @@ def test_results_identical_with_and_without(spark):
     on = rows(ngram_jaccard_pairs(docs_on, threshold=0.5, max_bucket=1000))
     off = rows(ngram_jaccard_pairs(docs_off, threshold=0.5, max_bucket=1000))
     assert on == off and len(on) > 0
+
+
+def test_footer_cache_retries_failures_and_keeps_one_version(tmp_path, monkeypatch):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"x": [1, 2, 3]}), path)
+
+    # A failed footer read (same file, same stat identity) is not cached.
+    def boom(*a, **k):
+        raise OSError("transient")
+
+    with monkeypatch.context() as m:
+        m.setattr(pq, "ParquetFile", boom)
+        assert files._footer_facts(path) is None
+    assert files._footer_facts(path) == (1, 3)
+
+    # A new version of the file replaces the old entry.
+    pq.write_table(pa.table({"x": list(range(10))}), path, row_group_size=5)
+    assert files._footer_facts(path) == (2, 10)
+    assert [k for k in files._FOOTER_CACHE if path in k] == [path]
